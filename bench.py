@@ -33,10 +33,12 @@ byte-identical to r13.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -80,17 +82,20 @@ def main() -> None:
         "yes",
         "on",
     }
-    if cold:
-        import tempfile
+    with contextlib.ExitStack() as cleanup:
+        if cold:
+            # no durable warehouse reads OR writes leak into (or out of)
+            # the cold arm: disable the read-or-build path and point the
+            # root at a throwaway dir, removed at exit, in case anything
+            # ignores the flag
+            os.environ["SPARK_GRAFT_EDGE_WAREHOUSE"] = "0"
+            os.environ["SPARK_GRAFT_WAREHOUSE"] = cleanup.enter_context(
+                tempfile.TemporaryDirectory(prefix="bench-cold-warehouse-")
+            )
+        run_suite(sf_dir, sf, runs, cold)
 
-        # no durable warehouse reads OR writes leak into (or out of)
-        # the cold arm: disable the read-or-build path and point the
-        # root at a throwaway dir in case anything ignores the flag
-        os.environ["SPARK_GRAFT_EDGE_WAREHOUSE"] = "0"
-        os.environ["SPARK_GRAFT_WAREHOUSE"] = tempfile.mkdtemp(
-            prefix="bench-cold-warehouse-"
-        )
 
+def run_suite(sf_dir: str, sf: float | None, runs: int, cold: bool) -> None:
     spark = get_spark("bench")
     queries = registry.get_queries()
 

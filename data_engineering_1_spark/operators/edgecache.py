@@ -51,42 +51,83 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-_CACHE: dict[tuple[str, str, str], tuple[SparkSession, DataFrame]] = {}
-# RLock (ADVICE r8): `build` recurses into _cached (pairs -> items), and
-# concurrent first calls must not race to persist two copies of the same
-# relation (one would leak, unreferenced but persisted).
-_LOCK = threading.RLock()
+# key -> (owning session, value); every value has ``unpersist()``.
+_CACHE: dict[tuple, tuple[SparkSession, object]] = {}
+# _LOCK guards only the two dicts, never a build: a build
+# runs under its own key's in-flight lock, so a first build blocks
+# callers of the SAME key (one build, one persisted copy — a second
+# would leak, unreferenced but persisted) while other keys build
+# concurrently. Builds may recurse into other keys (pairs -> items);
+# the registered relations form a DAG, so per-key locks cannot cycle.
+_LOCK = threading.Lock()
+_INFLIGHT: dict[tuple, threading.Lock] = {}
+
+
+def _release(value) -> None:
+    try:
+        value.unpersist()
+    except Exception:
+        pass
+
+
+def _lookup(spark: SparkSession, key: tuple, fresh):
+    """The live value under ``key``, else None; drops a stale entry
+    (other session, or ``fresh(value)`` false). Caller holds _LOCK."""
+    hit = _CACHE.get(key)
+    if hit is None:
+        return None
+    owner, value = hit
+    if owner is spark and fresh(value):
+        return value
+    del _CACHE[key]
+    _release(value)
+    return None
+
+
+def session_entry(spark: SparkSession, key: tuple, build, fresh=None):
+    """Register/read one session-scoped value under ``key``.
+
+    ``build()`` runs at most once per live entry and returns a value
+    with ``unpersist()`` (a persisted DataFrame, an index holding one).
+    The entry is pinned to the owning SparkSession by identity and to
+    the application id (a new session or app rebuilds rather than
+    reusing DataFrames whose analyzer state belongs to a dead one);
+    ``fresh(value)``, when given, must hold for a hit — a false result
+    unpersists the old value and rebuilds. Dropped by
+    :func:`clear_cache` or app exit."""
+    app = spark.sparkContext.applicationId
+    key = (app, *key)
+    fresh = fresh or (lambda _value: True)
+    with _LOCK:
+        # evict entries owned by dead applications (ADVICE r8): their
+        # values can never be returned again and would otherwise linger
+        # in the module dict for the process lifetime.
+        for stale in [k for k in _CACHE if k[0] != app]:
+            _release(_CACHE.pop(stale)[1])
+        for stale in [k for k in _INFLIGHT if k[0] != app]:
+            del _INFLIGHT[stale]
+        value = _lookup(spark, key, fresh)
+        if value is not None:
+            return value
+        inflight = _INFLIGHT.setdefault(key, threading.Lock())
+    with inflight:
+        with _LOCK:  # a concurrent caller may have built it meanwhile
+            value = _lookup(spark, key, fresh)
+        if value is None:
+            value = build()
+            with _LOCK:
+                _CACHE[key] = (spark, value)
+        return value
 
 
 def _cached(
     spark: SparkSession, sf_dir: str, kind: str, build
 ) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.realpath(sf_dir), kind)
-    with _LOCK:
-        # evict entries owned by dead applications (ADVICE r8): their
-        # DataFrames can never be returned again (the app-id key check
-        # below misses them forever) and would otherwise linger in the
-        # module dict for the process lifetime.
-        for stale in [k for k in _CACHE if k[0] != app]:
-            _, old = _CACHE.pop(stale)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        hit = _CACHE.get(key)
-        if hit is not None:
-            cached_spark, df = hit
-            if cached_spark is spark:
-                return df
-            try:  # same app, different session: drop the stale entry
-                df.unpersist()
-            except Exception:
-                pass
-            del _CACHE[key]
-        df = build().persist(StorageLevel.MEMORY_AND_DISK)
-        _CACHE[key] = (spark, df)
-        return df
+    return session_entry(
+        spark,
+        (os.path.realpath(sf_dir), kind),
+        lambda: build().persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 def session_cached(
@@ -110,14 +151,13 @@ def session_cached(
 
 
 def clear_cache() -> None:
-    """Unpersist and forget every cached edge relation (test hygiene,
-    and the cold bench arm's per-query reset)."""
+    """Unpersist and forget every registered value — cached edge
+    relations, other modules' ``session_cached`` relations and the RAG
+    IVF indexes (test hygiene, and the cold bench arm's per-query
+    reset)."""
     with _LOCK:
-        for _, (_, df) in list(_CACHE.items()):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        for _, value in _CACHE.values():
+            _release(value)
         _CACHE.clear()
 
 

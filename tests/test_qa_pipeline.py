@@ -197,3 +197,202 @@ def test_demo_pipeline_end_to_end(spark, sf_dir, tmp_path):
     back = spark.read.parquet(out["path"])
     assert back.count() == report["after_contamination_screen"]
     assert "text" not in back.columns  # raw text dropped before landing
+
+
+# ---- IVF index lifetime: built once per knowledge base -----------------
+
+IVF_KW = dict(client=lambda s, u: "a", top_k=3, id_col="chunk_id",
+              method="ivf", n_clusters=4, nprobe=2)
+
+
+def _write_pdfs(d, tag: str, n_files: int = 5) -> str:
+    """Stub PDFs (UTF-8 text, blank line between paragraphs) whose
+    names and words depend on ``tag``, so two tags give two corpora
+    with disjoint chunk ids."""
+    d.mkdir()
+    words = ("spark", "vector", "index", "query", "cluster", "answer",
+             "chunk", "embed", "probe", "corpus", "engine", "table")
+    for i in range(n_files):
+        paras = [
+            " ".join(f"{tag}{words[(i * 5 + j * 3 + w) % len(words)]}"
+                     for w in range(9))
+            for j in range(4)
+        ]
+        (d / f"{tag}{i}.pdf").write_text("\n\n".join(paras), encoding="utf-8")
+    return str(d)
+
+
+def _scratch_ivf(spark, chunks, q: str, n_clusters: int, nprobe: int):
+    """The from-scratch IVF answer: label_centroids + ivf_assign rebuilt
+    for this one question, as ``ivf_topk_search`` does by default."""
+    from data_engineering_1_spark.operators.similarity import ivf_topk_search
+
+    qdf = spark.createDataFrame(
+        [(hash_embed_texts(pd.Series([q]), dim=64)[0],)],
+        "query_vec array<float>",
+    )
+    labeled = chunks.withColumn(
+        "label",
+        F.pmod(F.xxhash64("chunk_id"), F.lit(n_clusters)).cast("int"),
+    )
+    return [
+        (r["chunk_id"], r["cosine_sim"])
+        for r in ivf_topk_search(labeled, qdf, k=3, nprobe=nprobe,
+                                 id_col="chunk_id").collect()
+    ]
+
+
+def _hits(resp):
+    return [(s["metadata"]["chunk_id"], s["similarity"])
+            for s in resp["sources"]]
+
+
+def _ivf_entries():
+    from data_engineering_1_spark.operators import edgecache
+
+    return [v for k, (_, v) in edgecache._CACHE.items()
+            if "ivf_index" in k]
+
+
+class TestIvfIndexLifetime:
+    @pytest.fixture(autouse=True)
+    def _clean_registry(self):
+        from data_engineering_1_spark.operators import edgecache
+
+        edgecache.clear_cache()
+        yield
+        edgecache.clear_cache()
+
+    @pytest.fixture()
+    def kb(self, spark, tmp_path):
+        from data_engineering_1_spark.warehouse import ChunkWarehouse
+
+        wh = ChunkWarehouse(spark, str(tmp_path / "kb"))
+        wh.build(_write_pdfs(tmp_path / "a", "a"), force_rebuild=True)
+        return wh
+
+    def test_two_answers_build_once_and_match_scratch(
+        self, spark, kb, monkeypatch
+    ):
+        from data_engineering_1_spark.operators import similarity
+
+        builds = []
+
+        class Counting(similarity.IvfIndex):
+            def __init__(self, *a, **kw):
+                builds.append(1)
+                super().__init__(*a, **kw)
+
+        monkeypatch.setattr(similarity, "IvfIndex", Counting)
+        for q in ("aspark avector aindex", "aprobe acorpus aengine"):
+            got = _hits(qa.answer_with_sources(spark, q, kb.load("embeddings"),
+                                               **IVF_KW))
+            assert len(got) == 3
+            assert got == _scratch_ivf(spark, kb.load("embeddings"), q, 4, 2)
+        assert len(builds) == 1
+        assert len(_ivf_entries()) == 1
+
+    def test_force_rebuild_replaces_index(self, spark, kb, tmp_path):
+        from pyspark.storagelevel import StorageLevel
+
+        from data_engineering_1_spark.operators.similarity import ivf_index
+
+        sc = spark.sparkContext
+        qa.answer_with_sources(spark, "aspark aquery", kb.load("embeddings"),
+                               **IVF_KW)
+        old = ivf_index(kb.load("embeddings"), n_clusters=4,
+                        id_col="chunk_id")
+        resident = len(sc._jsc.sc().getRDDStorageInfo())
+
+        kb.build(_write_pdfs(tmp_path / "b", "b"), force_rebuild=True)
+        q = "bspark bvector bquery"
+        got = _hits(qa.answer_with_sources(spark, q, kb.load("embeddings"),
+                                           **IVF_KW))
+        assert got == _scratch_ivf(spark, kb.load("embeddings"), q, 4, 2)
+        assert len(got) == 3 and all(cid.startswith("b") for cid, _ in got)
+        new = ivf_index(kb.load("embeddings"), n_clusters=4,
+                        id_col="chunk_id")
+        assert new is not old
+        assert _ivf_entries() == [new]
+        assert old.assignment.storageLevel == StorageLevel.NONE
+        assert old.centroids.storageLevel == StorageLevel.NONE
+        assert len(sc._jsc.sc().getRDDStorageInfo()) <= resident
+
+    def test_clear_cache_drops_index(self, spark, kb):
+        from pyspark.storagelevel import StorageLevel
+
+        from data_engineering_1_spark.operators import edgecache
+        from data_engineering_1_spark.operators.similarity import ivf_index
+
+        ix = ivf_index(kb.load("embeddings"), n_clusters=4, id_col="chunk_id")
+        assert ivf_index(kb.load("embeddings"), n_clusters=4,
+                         id_col="chunk_id") is ix
+        edgecache.clear_cache()
+        assert _ivf_entries() == []
+        assert ix.assignment.storageLevel == StorageLevel.NONE
+        assert ix.centroids.storageLevel == StorageLevel.NONE
+        assert ivf_index(kb.load("embeddings"), n_clusters=4,
+                         id_col="chunk_id") is not ix
+
+    def test_in_memory_chunk_table_answers_unregistered(self, spark, kb):
+        rows = kb.load("embeddings").select(
+            "chunk_id", "text", "embedding").collect()
+        mem = spark.createDataFrame(
+            [tuple(r) for r in rows],
+            "chunk_id string, text string, embedding array<float>",
+        )
+        q = "aanswer achunk aembed"
+        for _ in range(2):
+            got = _hits(qa.answer_with_sources(spark, q, mem, **IVF_KW))
+            assert got == _scratch_ivf(spark, mem, q, 4, 2)
+        assert _ivf_entries() == []  # no input files: nothing to key on
+
+    def test_empty_chunk_table_answers_nothing(self, spark, tmp_path):
+        path = str(tmp_path / "empty")
+        spark.createDataFrame(
+            [], "chunk_id string, text string, embedding array<float>"
+        ).write.parquet(path)
+        resp = qa.answer_with_sources(spark, "q", spark.read.parquet(path),
+                                      **IVF_KW)
+        assert resp["sources"] == []
+
+    def test_full_probe_equals_exact(self, spark, kb):
+        q = "acluster aengine atable"
+        kw = dict(IVF_KW, nprobe=4)
+        exact = qa.answer_with_sources(
+            spark, q, kb.load("embeddings"),
+            **dict(kw, method="exact"))
+        assert _hits(qa.answer_with_sources(
+            spark, q, kb.load("embeddings"), **kw)) == _hits(exact)
+
+    def test_warm_question_plan_and_jobs(self, spark, kb):
+        """The second IVF question probes the resident index: the plans
+        it runs have no posexplode, no Window and no hash shuffle, and
+        keep the TakeOrderedAndProject top-k; it runs at most 6 jobs.
+        The first (index-building) answer runs at most the 11 jobs of
+        the per-question rebuild it replaced."""
+        sc = spark.sparkContext
+        chunks = kb.load("embeddings")
+        groups = ("ivf-first-pin", "ivf-warm-pin")
+        try:
+            for group, q in zip(groups, ("aspark aindex", "avector acorpus")):
+                sc.setJobGroup(group, group)
+                qa.answer_with_sources(spark, q, chunks, **IVF_KW)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        first, warm = (set(sc.statusTracker().getJobIdsForGroup(g))
+                       for g in groups)
+        assert len(first) <= 11
+        assert len(warm) <= 6
+        executions = spark._jsparkSession.sharedState().statusStore(
+        ).executionsList()
+        plans = [
+            e.physicalPlanDescription()
+            for e in (executions.apply(i) for i in range(executions.size()))
+            if any(e.jobs().contains(j) for j in warm)
+        ]
+        assert plans
+        assert any("TakeOrderedAndProject" in p for p in plans)
+        for banned in ("posexplode", "Window", "hashpartitioning"):
+            assert not any(banned in p for p in plans), banned
