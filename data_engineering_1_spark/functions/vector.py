@@ -77,9 +77,10 @@ def vec_norm(a: Column | str, dim: int | None = None) -> Column:
 
 
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """Exact cosine similarity; IEEE double division (0-norm -> NaN/Inf
-    propagates rather than erroring, same as DuckDB)."""
-    return vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
+    """Exact cosine similarity; NULL when either vector has norm 0
+    (``try_divide``: plain division raises DIVIDE_BY_ZERO under ANSI
+    mode), the same NULL DuckDB's ``/`` gives :func:`o_cosine`."""
+    return F.try_divide(vec_dot(a, b), vec_norm(a) * vec_norm(b))
 
 
 def cosine_distance(a: Column | str, b: Column | str) -> Column:

@@ -13,7 +13,9 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -143,6 +145,21 @@ def generate_answer(
         return f"生成答案时出错: {str(e)}"
 
 
+def query_frame(spark: SparkSession, query: str, dim: int = DEFAULT_DIM) -> DataFrame:
+    """The embedded question as a one-row ``query_vec array<float>``
+    frame, built from a ``pyarrow.Table`` so Spark plans it as a JVM
+    ``LocalRelation`` whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says. A row list (or a pandas frame with that setting off) plans as
+    a scan of a Python RDD, and every scan of it starts Python-worker
+    tasks. The float32 cast is the one Spark applies to a row list."""
+    qvec = np.asarray(hash_embed_texts(pd.Series([query]), dim=dim)[0],
+                      dtype=np.float32)
+    return spark.createDataFrame(
+        pa.table({"query_vec": pa.array([qvec], type=pa.list_(pa.float32()))}),
+        "query_vec array<float>",
+    )
+
+
 def answer_with_sources(
     spark: SparkSession,
     query: str,
@@ -178,27 +195,34 @@ def answer_with_sources(
       to exact search (pinned equal in tests).
 
     The IVF index is built once per knowledge base, not per question:
-    ``similarity.ivf_index`` holds the table's ``label_centroids`` and
-    its ``ivf_assign`` output, both persisted MEMORY_AND_DISK, and the
-    search is ``ivf_topk_search`` over those two parts. The index is
-    keyed on the semantics of the ``chunks`` plan, every input file's
-    path, length and mtime, ``n_clusters`` and the id/vec columns, so a
-    rebuilt table gets a new index and the old one is unpersisted; it
-    lives until ``edgecache.clear_cache()`` or the end of the session.
-    Cold price: the first IVF question materializes both parts (the
-    centroid aggregate over the chunk table, then the assignment) inside
-    its own search; every later question ranks the centroids against
-    the query in-row, broadcast-semi-joins the assignment filtered to
-    the probed labels and runs the top-k, with no aggregate over the
-    chunk table and no hash shuffle. A ``chunks`` relation without
-    input files, or with a nondeterministic plan, cannot be keyed and
-    rebuilds its index on every question.
+    ``similarity.ivf_index`` holds the table's ``label_centroids``
+    (collected once into a driver-local ``LocalRelation``) and its
+    ``ivf_assign`` output (persisted MEMORY_AND_DISK), and the search is
+    ``ivf_topk_search`` over those two parts. The index is keyed on the
+    semantics of the ``chunks`` plan, every input file's path, length
+    and mtime, ``n_clusters`` and the id/vec columns, so a rebuilt table
+    gets a new index and the old assignment is unpersisted; it lives
+    until ``edgecache.clear_cache()`` or the end of the session. Cold
+    price: the first IVF question collects the centroid aggregate over
+    the chunk table and materializes the assignment inside its own
+    search; every later question ranks the centroids against the query
+    in-row, broadcast-semi-joins the assignment filtered to the probed
+    labels and runs the top-k, with no aggregate over the chunk table
+    and no hash shuffle. A ``chunks`` relation without input files, or
+    with a nondeterministic plan, cannot be keyed and rebuilds its index
+    on every question.
+
+    The query frame is :func:`query_frame`'s ``LocalRelation``, so a
+    warm question starts no Python worker: 2 jobs for an exact answer,
+    5 for an IVF one. A chunk or a question with no word tokens embeds
+    to the zero vector, whose cosine is NULL (never an error); such hits
+    sort last and are dropped, so a question with no word tokens cites
+    nothing and the client still answers it.
 
     ``dim`` is a parameter (default: the fixture embedding width) rather
     than a ``.first()`` sniff of the vector column — the only driver
     action here is the by-design collect of the k retrieved rows."""
-    qvec = hash_embed_texts(pd.Series([query]), dim=dim)[0]
-    qdf = spark.createDataFrame([(qvec,)], "query_vec array<float>")
+    qdf = query_frame(spark, query, dim)
     if method == "ivf":
         ix = ivf_index(
             chunks, n_clusters=n_clusters, vec_col=vec_col, id_col=id_col
@@ -223,7 +247,7 @@ def answer_with_sources(
     else:
         raise ValueError(f"unknown retrieval method: {method!r}")
     hits = hits.withColumnRenamed("cosine_sim", "similarity")
-    docs = [r.asDict() for r in hits.collect()]
+    docs = [r.asDict() for r in hits.collect() if r["similarity"] is not None]
     return {
         "query": query,
         "answer": generate_answer(query, docs, client),

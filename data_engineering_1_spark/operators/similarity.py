@@ -52,13 +52,14 @@ def paired_cosine(
     vec_a: str, vec_b: str, norm_a: str, norm_b: str, dim: int | None = None
 ) -> F.Column:
     """dot/(norm_a*norm_b) with precomputed norms — bit-identical to
-    cosine_similarity(vec_a, vec_b). ``dim`` selects the unrolled kernel."""
+    cosine_similarity(vec_a, vec_b), NULL when either norm is 0.
+    ``dim`` selects the unrolled kernel."""
     dot = (
         vec_dot_fixed(vec_a, vec_b, dim)
         if dim is not None
         else vec_dot(vec_a, vec_b)
     )
-    return dot / (F.col(norm_a) * F.col(norm_b))
+    return F.try_divide(dot, F.col(norm_a) * F.col(norm_b))
 
 
 def topk_by_cosine(
@@ -556,8 +557,10 @@ class IvfIndex:
     precomputed: ``centroids`` is :func:`label_centroids`' output and
     ``assignment`` is :func:`ivf_assign`'s. When ``fingerprint`` (see
     :func:`ivf_index`) lets the index be reused, the centroids are
-    collected once and both parts are persisted MEMORY_AND_DISK; else
-    both stay plain plans."""
+    collected once into a driver-local ``LocalRelation`` (n_clusters x
+    dim rows, built from a ``pyarrow.Table`` so no scan of it starts a
+    Python worker) and the assignment is persisted MEMORY_AND_DISK;
+    else both stay plain plans."""
 
     def __init__(
         self,
@@ -574,8 +577,8 @@ class IvfIndex:
             # collected once (n_clusters x dim rows) so no plan that
             # reads the index carries the centroid build's lineage
             cents = labeled.sparkSession.createDataFrame(
-                cents.collect(), cents.schema
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+                cents.toArrow(), cents.schema
+            )
         assign = ivf_assign(labeled, cents, label_col=label_col,
                             vec_col=vec_col, id_col=id_col)
         if fingerprint is not None:
@@ -583,10 +586,7 @@ class IvfIndex:
         self.centroids, self.assignment = cents, assign
 
     def unpersist(self) -> None:
-        # dependent first: dropping the centroids while the assignment
-        # is cached would re-cache the assignment over a fresh plan
         self.assignment.unpersist()
-        self.centroids.unpersist()
 
 
 def _input_fingerprint(df: DataFrame) -> tuple | None:
@@ -630,7 +630,8 @@ def ivf_index(
     ``vectors`` plan, ``n_clusters`` and the three column names, and it
     is fresh only while every input file keeps its path, length and
     mtime: a rebuilt table (same plan, new files) unpersists the old
-    index and builds a new one. A relation its files cannot pin (see
+    index's assignment (its centroids are driver-local data) and builds
+    a new one. A relation its files cannot pin (see
     :func:`_input_fingerprint`) gets a fresh, unpersisted,
     unregistered index on every call. ``edgecache.clear_cache()`` drops
     every index."""

@@ -37,6 +37,7 @@ terms round-9 DECIMAL-staged), rounded 6.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -642,8 +643,11 @@ def _mbm_exact_dots(spark: SparkSession, qv: DataFrame) -> DataFrame:
         .cast("int")
         .alias("blk"),
     )
+    pairs = [(i, j) for i in range(_MBM_B) for j in range(i, _MBM_B)]
+    # a pyarrow.Table plans as a JVM LocalRelation (a row list is a
+    # Python RDD whose every scan starts Python workers)
     grid = spark.createDataFrame(
-        [(i, j) for i in range(_MBM_B) for j in range(i, _MBM_B)],
+        pa.table({"b1": [i for i, _ in pairs], "b2": [j for _, j in pairs]}),
         "b1 int, b2 int",
     )
     left = qb.select(

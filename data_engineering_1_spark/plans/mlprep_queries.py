@@ -31,6 +31,7 @@ engines) and the Jaccard keep-decision compares the ROUNDED value.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -161,8 +162,11 @@ def stratified_exact_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     splits = strata.crossJoin(
         F.broadcast(
+            # a pyarrow.Table plans as a JVM LocalRelation, not a
+            # Python RDD
             docs.sparkSession.createDataFrame(
-                [("train", 1), ("val", 2), ("test", 3)], "split string, ord int"
+                pa.table({"split": ["train", "val", "test"], "ord": [1, 2, 3]}),
+                "split string, ord int",
             )
         )
     ).select(

@@ -222,15 +222,21 @@ def _write_pdfs(d, tag: str, n_files: int = 5) -> str:
     return str(d)
 
 
+def _row_list_query(spark, q: str):
+    """The query frame as a Python row list: the reference for the
+    float32 cast of :func:`qa.query_frame`."""
+    return spark.createDataFrame(
+        [(hash_embed_texts(pd.Series([q]), dim=64)[0],)],
+        "query_vec array<float>",
+    )
+
+
 def _scratch_ivf(spark, chunks, q: str, n_clusters: int, nprobe: int):
     """The from-scratch IVF answer: label_centroids + ivf_assign rebuilt
     for this one question, as ``ivf_topk_search`` does by default."""
     from data_engineering_1_spark.operators.similarity import ivf_topk_search
 
-    qdf = spark.createDataFrame(
-        [(hash_embed_texts(pd.Series([q]), dim=64)[0],)],
-        "query_vec array<float>",
-    )
+    qdf = _row_list_query(spark, q)
     labeled = chunks.withColumn(
         "label",
         F.pmod(F.xxhash64("chunk_id"), F.lit(n_clusters)).cast("int"),
@@ -254,23 +260,37 @@ def _ivf_entries():
             if "ivf_index" in k]
 
 
+@pytest.fixture()
+def kb(spark, tmp_path):
+    from data_engineering_1_spark.warehouse import ChunkWarehouse
+
+    wh = ChunkWarehouse(spark, str(tmp_path / "kb"))
+    wh.build(_write_pdfs(tmp_path / "a", "a"), force_rebuild=True)
+    return wh
+
+
+@pytest.fixture()
+def _clean_registry():
+    from data_engineering_1_spark.operators import edgecache
+
+    edgecache.clear_cache()
+    yield
+    edgecache.clear_cache()
+
+
+def _plans_of_jobs(spark, jobs) -> list[str]:
+    """Physical plans of the SQL executions that ran any of ``jobs``."""
+    executions = spark._jsparkSession.sharedState().statusStore(
+    ).executionsList()
+    return [
+        e.physicalPlanDescription()
+        for e in (executions.apply(i) for i in range(executions.size()))
+        if any(e.jobs().contains(j) for j in jobs)
+    ]
+
+
+@pytest.mark.usefixtures("_clean_registry")
 class TestIvfIndexLifetime:
-    @pytest.fixture(autouse=True)
-    def _clean_registry(self):
-        from data_engineering_1_spark.operators import edgecache
-
-        edgecache.clear_cache()
-        yield
-        edgecache.clear_cache()
-
-    @pytest.fixture()
-    def kb(self, spark, tmp_path):
-        from data_engineering_1_spark.warehouse import ChunkWarehouse
-
-        wh = ChunkWarehouse(spark, str(tmp_path / "kb"))
-        wh.build(_write_pdfs(tmp_path / "a", "a"), force_rebuild=True)
-        return wh
-
     def test_two_answers_build_once_and_match_scratch(
         self, spark, kb, monkeypatch
     ):
@@ -366,33 +386,129 @@ class TestIvfIndexLifetime:
             spark, q, kb.load("embeddings"), **kw)) == _hits(exact)
 
     def test_warm_question_plan_and_jobs(self, spark, kb):
-        """The second IVF question probes the resident index: the plans
-        it runs have no posexplode, no Window and no hash shuffle, and
-        keep the TakeOrderedAndProject top-k; it runs at most 6 jobs.
-        The first (index-building) answer runs at most the 11 jobs of
-        the per-question rebuild it replaced."""
+        """A warm question starts no Python worker: the plans of a warm
+        exact and a warm IVF answer scan no Python RDD (no
+        ``ExistingRDD``), the exact one runs at most 2 jobs and the IVF
+        one at most 6. The IVF one probes the resident index: no
+        posexplode, no Window, no hash shuffle, and the
+        TakeOrderedAndProject top-k stays. The first (index-building)
+        answer runs at most the 11 jobs of the per-question rebuild it
+        replaced."""
         sc = spark.sparkContext
         chunks = kb.load("embeddings")
-        groups = ("ivf-first-pin", "ivf-warm-pin")
+        asked = (
+            ("exact-first-pin", "exact", "aquery atable"),
+            ("exact-warm-pin", "exact", "aengine aprobe"),
+            ("ivf-first-pin", "ivf", "aspark aindex"),
+            ("ivf-warm-pin", "ivf", "avector acorpus"),
+        )
         try:
-            for group, q in zip(groups, ("aspark aindex", "avector acorpus")):
+            for group, method, q in asked:
                 sc.setJobGroup(group, group)
-                qa.answer_with_sources(spark, q, chunks, **IVF_KW)
+                qa.answer_with_sources(spark, q, chunks,
+                                       **dict(IVF_KW, method=method))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        first, warm = (set(sc.statusTracker().getJobIdsForGroup(g))
-                       for g in groups)
+        _, exact_warm, first, warm = (
+            set(sc.statusTracker().getJobIdsForGroup(g)) for g, _, _ in asked
+        )
+        assert len(exact_warm) <= 2
         assert len(first) <= 11
         assert len(warm) <= 6
-        executions = spark._jsparkSession.sharedState().statusStore(
-        ).executionsList()
-        plans = [
-            e.physicalPlanDescription()
-            for e in (executions.apply(i) for i in range(executions.size()))
-            if any(e.jobs().contains(j) for j in warm)
-        ]
-        assert plans
-        assert any("TakeOrderedAndProject" in p for p in plans)
+        for jobs in (exact_warm, warm):
+            plans = _plans_of_jobs(spark, jobs)
+            assert plans
+            assert any("TakeOrderedAndProject" in p for p in plans)
+            for banned in ("ExistingRDD", "LogicalRDD"):
+                assert not any(banned in p for p in plans), banned
+        plans = _plans_of_jobs(spark, warm)
         for banned in ("posexplode", "Window", "hashpartitioning"):
             assert not any(banned in p for p in plans), banned
+
+    def test_query_frame_is_local_relation_matching_row_list(
+        self, spark, kb
+    ):
+        """The query frame plans as a JVM LocalRelation even with Arrow
+        conversion off, holds the same float32 values as a row-list
+        frame, and every question gets the hits the row-list frame gets
+        from ``topk_by_cosine`` and from ``ivf_topk_search`` over the
+        same index."""
+        from data_engineering_1_spark.operators.similarity import (
+            ivf_index,
+            ivf_topk_search,
+            topk_by_cosine,
+        )
+
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        before = spark.conf.get(key)
+        try:
+            for arrow in ("true", "false"):
+                spark.conf.set(key, arrow)
+                qdf = qa.query_frame(spark, "aspark aquery", dim=64)
+                plan = qdf._jdf.queryExecution().optimizedPlan()
+                assert plan.nodeName() == "LocalRelation", arrow
+                assert qdf.collect() == _row_list_query(
+                    spark, "aspark aquery").collect()
+        finally:
+            spark.conf.set(key, before)
+
+        chunks = kb.load("embeddings")
+        ix = ivf_index(chunks, n_clusters=4, id_col="chunk_id")
+        labeled = chunks.withColumn(
+            "label", F.pmod(F.xxhash64("chunk_id"), F.lit(4)).cast("int"))
+        for q in ("aspark avector", "acluster aembed atable",
+                  "aanswer achunk", "aindex aprobe acorpus"):
+            rows = _row_list_query(spark, q)
+            want_exact = [
+                (r["chunk_id"], r["cosine_sim"])
+                for r in topk_by_cosine(chunks, rows, k=3,
+                                        id_col="chunk_id").collect()
+            ]
+            want_ivf = [
+                (r["chunk_id"], r["cosine_sim"])
+                for r in ivf_topk_search(
+                    labeled, rows, k=3, nprobe=2, centroids=ix.centroids,
+                    assignment=ix.assignment, id_col="chunk_id").collect()
+            ]
+            assert _hits(qa.answer_with_sources(
+                spark, q, chunks, **dict(IVF_KW, method="exact"))) == want_exact
+            assert _hits(qa.answer_with_sources(
+                spark, q, chunks, **IVF_KW)) == want_ivf
+
+
+@pytest.mark.usefixtures("_clean_registry")
+class TestZeroNormVectors:
+    """A zero vector (a question or a chunk with no word tokens) has a
+    NULL cosine, never a DIVIDE_BY_ZERO under ANSI mode, and is never
+    cited."""
+
+    @pytest.mark.parametrize("method", ["exact", "ivf"])
+    def test_question_without_words_cites_nothing(self, spark, kb, method):
+        for q in ("", "...", "？！"):
+            seen = []
+            resp = qa.answer_with_sources(
+                spark, q, kb.load("embeddings"),
+                **dict(IVF_KW, method=method,
+                       client=lambda s, u: seen.append(u) or "no source"))
+            assert resp["sources"] == []
+            assert resp["answer"] == "no source" and len(seen) == 1
+
+    @pytest.mark.parametrize("method", ["exact", "ivf"])
+    def test_punctuation_chunk_never_cited(self, spark, tmp_path, method):
+        from data_engineering_1_spark.warehouse import ChunkWarehouse
+
+        pdfs = _write_pdfs(tmp_path / "a", "a")
+        rule = "-" * 40
+        with open(f"{pdfs}/a0.pdf", "a", encoding="utf-8") as fh:
+            fh.write("\n\n" + rule)
+        wh = ChunkWarehouse(spark, str(tmp_path / "kb"))
+        wh.build(pdfs, force_rebuild=True)
+        chunks = wh.load("embeddings")
+        texts = [r["text"] for r in chunks.select("text").collect()]
+        assert rule in texts
+        resp = qa.answer_with_sources(
+            spark, "aspark aquery", chunks,
+            **dict(IVF_KW, method=method, nprobe=4, top_k=len(texts)))
+        assert len(resp["sources"]) == len(texts) - 1
+        assert rule not in [s["text"] for s in resp["sources"]]

@@ -80,6 +80,40 @@ def test_known_cosines(spark, vec_df):
     assert got[6] == 1.0
 
 
+def test_zero_vector_cosine_is_null_like_duckdb(spark):
+    """A norm-0 side gives a NULL cosine in both kernels (no
+    DIVIDE_BY_ZERO under ANSI mode), the value DuckDB's ``o_cosine``
+    gives on the same rows."""
+    import duckdb
+
+    from data_engineering_1_spark.functions.vector import o_cosine
+    from data_engineering_1_spark.operators.similarity import (
+        paired_cosine,
+        with_norm,
+    )
+
+    zero, unit = [0.0, 0.0, 0.0], [1.0, 0.0, 0.0]
+    pdf = pd.DataFrame({
+        "id": [1, 2, 3, 4],
+        "a": [zero, unit, zero, unit],
+        "b": [unit, zero, zero, unit],
+    })
+    df = with_norm(with_norm(
+        spark.createDataFrame(pdf, "id int, a array<double>, b array<double>"),
+        "a", "na"), "b", "nb")
+    got = df.select(
+        "id",
+        cosine_similarity("a", "b").alias("c"),
+        paired_cosine("a", "b", "na", "nb").alias("p"),
+    ).orderBy("id").collect()
+    want = duckdb.sql(
+        f"SELECT id, {o_cosine('a', 'b')} AS c FROM pdf ORDER BY id"
+    ).fetchall()
+    assert [(r.id, r.c) for r in got] == want == [
+        (1, None), (2, None), (3, None), (4, 1.0)]
+    assert [r.p for r in got] == [r.c for r in got]
+
+
 def test_topk_deterministic_tiebreak(vec_df):
     """Reference semantics: top_k=5 cosine ranking (vector_store.py:152-175)
     with ties broken by id — ids 1,3,6 all have cosine 1."""
